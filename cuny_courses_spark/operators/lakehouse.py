@@ -22,7 +22,7 @@ formats use, reduced to its load-bearing parts:
   re-referenced by (content-hash) name, so commit metadata is
   O(changed buckets), never O(table files).
 · COMMIT is atomic and exclusive: the manifest is written to a temp name
-  and published with ``os.link(tmp, final)`` — link(2) fails with EEXIST
+  and published with an exclusive hard link — link(2) fails with EEXIST
   if the version was already committed, which is the whole optimistic-
   concurrency protocol (first committer wins, loser retries at N+1).
   A reader can never observe a partial manifest: it either sees v{N}
@@ -82,13 +82,15 @@ Round 10 adds the two verbs the r9 verdict ranked first:
   OPTIMIZE folds pending DVs into clean files; CDC diffs effective
   (file, applicable-DV) state; VACUUM GCs expired sidecars.
 
-PORTABILITY (object stores): the publish step is isolated in
-``_publish_manifest`` — on a POSIX local FS it is ``os.link`` (atomic,
-fails-if-exists) + a directory fsync so the dirent survives a crash.
-S3/GCS/ABFS have no hardlink; the drop-in substitution at that seam is
-a conditional PUT (``If-None-Match: *`` on S3/GCS, lease/ETag on ABFS),
-which gives the identical first-committer-wins semantics. Everything
-above the seam is storage-agnostic.
+PROTOCOL MODULE: the on-disk rules above — manifest tree, commit and
+rebase, head pointer, deletion-vector applicability, column mapping,
+additive schema merge — live once in ``operators/lake_protocol.py``,
+which imports no pyspark so the lakefeed stream source and sink run
+the same code in Spark's Python workers. This module builds the Spark
+verbs on top of it. PORTABILITY (object stores): every metadata file is
+published through ``lake_protocol.write_json``, the only
+storage-specific step; its module docstring names the object-store
+substitution (a conditional PUT).
 """
 
 from __future__ import annotations
@@ -97,6 +99,7 @@ import glob
 import json
 import os
 import shutil
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -104,411 +107,37 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from cuny_courses_spark.common import fp
+from cuny_courses_spark.operators import lake_protocol as _lp
+from cuny_courses_spark.operators.lake_protocol import (
+    _N_BUCKETS,
+    _WIDEN_OK,
+    _advance_head,
+    _applicable_dvs,
+    _branch_path,
+    _bucket_of_path,
+    _colmap,
+    _manifest_path,
+    _merge_schemas,
+    _read_branch_doc,
+    _read_json,
+    _read_list_doc,
+    _read_manifest_doc,
+    _resolve_list_doc,
+    _table_n_buckets,
+    commit_snapshot,
+    is_temp_name,
+    latest_version,
+    read_manifest,
+    write_json,
+)
 from cuny_courses_spark.registry import register
 from cuny_courses_spark.sources.loaders import load
 
-_N_BUCKETS = 16
 
 
-def _manifest_path(table_dir: str, version: int) -> str:
-    return os.path.join(table_dir, "manifest", f"v{version}.json")
 
 
-# Metadata READS go through this module-level indirection so that
-# instrumentation (q_lake_latest_read counts cold-resolution opens) can
-# swap in a counting wrapper scoped to THIS module — never a process-wide
-# builtins.open patch, which would race any concurrent driver-side thread
-# (py4j callbacks, logging) and could leak a patched open on error.
-_meta_open = open
 
-
-def _publish_manifest(tmp: str, final: str) -> None:
-    """Publish a fully-written manifest at its final name, atomically and
-    exclusively — the ONLY storage-specific step in the commit protocol.
-
-    POSIX local FS: link(2) is atomic and fails with EEXIST if the target
-    exists (first committer wins), and the subsequent directory fsync
-    makes the new dirent durable — without it a "committed" version could
-    vanish on power loss despite the data fsync. On an object store this
-    function is the substitution point: S3/GCS conditional PUT
-    (If-None-Match: *) has the same atomic fail-if-exists contract.
-    """
-    os.link(tmp, final)  # atomic claim; EEXIST = lost the commit race
-    dfd = os.open(os.path.dirname(final), os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
-
-
-def _group_key(path: str) -> str:
-    """Manifest-tree group of a data file: its hash bucket (parsed from
-    the ``_b=N`` path segment every bucketed layout writes), else the
-    catch-all ``x`` group for unbucketed files."""
-    if "_b=" in path:
-        return f"b{path.split('_b=')[1].split(os.sep)[0]}"
-    return "x"
-
-
-def _write_group_manifest(mdir: str, content: dict) -> tuple[str, bool]:
-    """Write one CONTENT-ADDRESSED bucket-group manifest; return
-    ``(filename, created)``.
-
-    The name is the sha1 of the canonical JSON, so two snapshots whose
-    bucket has identical content (files + stats + added-versions + DVs)
-    reference the SAME group file by construction — structural sharing
-    without any parent bookkeeping. An existing target means identical
-    content (hash-addressed), so the EEXIST publish race is benign here,
-    unlike the version-list publish where it means a lost commit."""
-    import hashlib
-
-    payload = json.dumps(content, sort_keys=True)
-    name = f"mg-{hashlib.sha1(payload.encode()).hexdigest()}.json"
-    final = os.path.join(mdir, name)
-    if os.path.exists(final):
-        return name, False
-    tmp = os.path.join(mdir, f".{name}.tmp.{os.getpid()}.{uuid.uuid4().hex[:6]}")
-    with open(tmp, "w") as f:
-        f.write(payload)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, final)
-        created = True
-    except FileExistsError:
-        created = False  # another writer published identical content
-    finally:
-        os.unlink(tmp)
-    return name, created
-
-
-def commit_snapshot(
-    table_dir: str,
-    version: int,
-    files: list[str],
-    stats: dict[str, dict] | None = None,
-    meta: dict | None = None,
-    schema: dict | None = None,
-    dvs: dict[str, list[dict]] | None = None,
-    added: dict[str, int] | None = None,
-    props: dict | None = None,
-    rebase_from: int | None = None,
-    branch: str | None = None,
-) -> dict:
-    """Atomically publish ``files`` as snapshot ``version``.
-
-    ``branch`` (r11, the Iceberg WAP verb): when set, the manifest list
-    is written to the mutable branch ref ``b-<branch>.json`` instead of
-    claiming a main-line version — the staged snapshot shares the same
-    content-addressed group files but is INVISIBLE to main readers
-    (``latest_version``'s forward probe only sees ``v{N}.json`` names),
-    which is exactly the write-audit-publish isolation: audit jobs read
-    the branch, and ``publish_branch`` later promotes the audited list
-    to the next main version with one metadata link. Branch refs are
-    last-writer-wins (os.replace), like Iceberg branch heads.
-
-    Write-temp + ``_publish_manifest``: the publish is atomic and FAILS
-    if the target exists, so two writers racing to commit the same
-    version get exactly one winner (optimistic concurrency); the loser
-    raises FileExistsError and must retry against the next version.
-    Readers see either the complete manifest or none — never a partial.
-
-    ``stats`` maps file path → {"min", "max", "rows"} of the table key
-    (pruning metadata); ``meta`` is commit provenance (e.g. the streaming
-    ``batch_id`` that makes replayed commits detectable); ``schema`` is
-    the snapshot's READ schema (StructType.jsonValue()) — carrying it in
-    the manifest is what makes ADDITIVE SCHEMA EVOLUTION work: a child
-    snapshot can widen the schema, and readers apply the manifest schema
-    to every listed file, so files written before the evolution read
-    their missing columns as null (the Iceberg/Delta read contract).
-    ``dvs`` maps bucket (as str) → list of DELETION-VECTOR entries
-    ``{"path": sidecar, "v": commit version}`` (merge-on-read deletes):
-    readers subtract those keys from the bucket's data files at read
-    time instead of rewriting them. ``added`` maps file → version it
-    was added in; a DV applies only to files OLDER than it (per-file
-    scoping, so later appends can re-insert a deleted key).
-
-    TWO-LEVEL MANIFEST TREE (r10 verdict missing #1): the snapshot is
-    NOT one flat file listing. The file set is sharded by hash bucket
-    into immutable, CONTENT-ADDRESSED bucket-group manifests
-    (``mg-<sha1>.json``, each carrying its bucket's files + stats +
-    added-versions + DVs), and the version file ``v{N}.json`` is a
-    MANIFEST LIST: one ``{bucket: group-file}`` entry per occupied
-    bucket plus snapshot-level metadata (schema, props, commit meta).
-    Because group names are content hashes, a commit physically writes
-    only the groups whose content CHANGED — an untouched bucket's group
-    is re-referenced by name, no parent diffing needed — so a 1-bucket
-    append on a 10⁷-file table writes exactly 2 metadata files (its
-    group + the list) instead of re-listing every file. The list itself
-    is O(buckets) entries (KB), never O(files). Group files are written
-    and fsynced BEFORE the list publish so a published list can never
-    reference a missing group; orphaned groups from lost commit races
-    are GC'd by VACUUM. Returns a small commit report
-    ``{"version", "groups_total", "groups_written", "meta_files_written",
-    "rebased"}``.
-
-    CONFLICT DETECTION (r10 verdict missing #2): every commit records
-    the bucket-group keys it CHANGED relative to its parent list
-    (``touched`` — computed by comparing content-hash group names, so
-    it is exact, not declared). When a commit staged against
-    ``rebase_from`` loses the publish race, the loser inspects the
-    interloping commits' ``touched`` sets: if every one is DISJOINT
-    from its own, the commits commute at bucket granularity (the layout
-    hash-partitions rows, stats, added-versions and DVs by bucket), so
-    the loser REBASES — re-publishes the head's manifest list with its
-    own touched-group entries substituted — at head+1 with ZERO
-    re-staging (no data read or rewritten; 2 small metadata reads per
-    interloper). Only on bucket overlap (or a commit without touched
-    metadata, or diverged table props) does FileExistsError propagate
-    and ``commit_with_retry`` re-stage — optimistic concurrency that
-    degrades to a global lock only when writers actually collide,
-    which at 100 TB with many disjoint stream/merge writers is the
-    difference Delta/Iceberg conflict validation exists to make.
-    """
-    mdir = os.path.join(table_dir, "manifest")
-    os.makedirs(mdir, exist_ok=True)
-    final = _manifest_path(table_dir, version)
-    # pid + uuid like every other staged temp in this module: pid alone
-    # collides for SAME-PROCESS concurrent committers of one version
-    # (threaded drivers, guide §2.6) — the winner's post-publish unlink
-    # then deletes the loser's tmp mid-flight and the loser dies with
-    # FileNotFoundError instead of the protocol's FileExistsError, so
-    # its rebase retry never runs (caught by the r16 final gate run of
-    # tests/test_lakehouse.py::test_append_commit_race_single_winner).
-    tmp = os.path.join(
-        mdir, f".v{version}.json.tmp.{os.getpid()}.{uuid.uuid4().hex[:6]}"
-    )
-    dvs_clean = {
-        b: sorted(es, key=lambda e: e["path"])
-        for b, es in (dvs or {}).items()
-        if es
-    }
-    # shard by bucket group: files drive membership; DV-only buckets
-    # (a delete against a bucket whose files are all reused) still get
-    # a group so their sidecars travel in the tree.
-    by_group: dict[str, list[str]] = {}
-    for p in files:
-        by_group.setdefault(_group_key(p), []).append(p)
-    for b in dvs_clean:
-        by_group.setdefault(f"b{b}", [])
-    groups: dict[str, str] = {}
-    groups_written = 0
-    for g in sorted(by_group):
-        gfiles = sorted(by_group[g])
-        content: dict = {"files": gfiles}
-        gstats = {p: stats[p] for p in gfiles if p in stats} if stats else {}
-        if gstats:
-            content["stats"] = gstats
-        gadded = {p: added[p] for p in gfiles if p in added} if added else {}
-        if gadded:
-            content["added"] = gadded
-        if g.startswith("b") and g[1:] in dvs_clean:
-            content["dvs"] = dvs_clean[g[1:]]
-        name, created = _write_group_manifest(mdir, content)
-        groups[g] = name
-        groups_written += int(created)
-    # exact changed-bucket set vs the parent list, by content-hash name
-    # (v1 commits touch everything they create; a flat/absent parent
-    # yields touched=None — recorded as nothing, which later writers
-    # treat as "touches everything": the conservative direction).
-    base_v = rebase_from if rebase_from is not None else version - 1
-    touched: list[str] | None = None
-    if base_v == 0:
-        touched = sorted(groups)
-    else:
-        try:
-            bg = _read_list_doc(table_dir, base_v).get("groups")
-            if bg is not None:
-                touched = sorted(
-                    k
-                    for k in set(groups) | set(bg)
-                    if groups.get(k) != bg.get(k)
-                )
-        except (OSError, ValueError):
-            pass
-    import time as _time
-
-    # commit wall-clock (Delta's commit timestamp / Iceberg's
-    # snapshot timestamp-ms): what AS-OF-timestamp time travel resolves
-    # against. Informational for everything else — never part of
-    # content addressing (group files carry no ts, so sharing is
-    # unaffected).
-    doc = {"version": version, "groups": groups, "ts": _time.time()}
-    if touched is not None:
-        doc["touched"] = touched
-    if meta is not None:
-        doc["meta"] = meta
-    if props:  # table properties (e.g. stats_cols) — carried by writers
-        doc["props"] = props
-    if schema is not None:
-        doc["schema"] = schema
-    if branch is not None:
-        # branch ref: mutable, never claims a main version, never moves
-        # the head pointer — main readers cannot see it (WAP isolation).
-        doc["branch"] = branch
-        ref = _branch_path(table_dir, branch)
-        with open(tmp, "w") as f:
-            json.dump(doc, f, sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, ref)  # last-writer-wins branch head
-        return {
-            "version": version,
-            "groups_total": len(groups),
-            "groups_written": groups_written,
-            "meta_files_written": groups_written + 1,
-            "rebased": False,
-            "branch": branch,
-        }
-    with open(tmp, "w") as f:
-        json.dump(doc, f, sort_keys=True)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        _publish_manifest(tmp, final)
-    except FileExistsError:
-        os.unlink(tmp)
-        if rebase_from is None or touched is None:
-            raise
-        ver = _rebase_publish(
-            table_dir, rebase_from, groups, touched, meta, props, schema
-        )
-        return {
-            "version": ver,
-            "groups_total": len(groups),
-            "groups_written": groups_written,
-            "meta_files_written": groups_written + 1,
-            "rebased": True,
-        }
-    else:
-        os.unlink(tmp)
-    _advance_head(table_dir, version)  # HEAD hint — after publish, never before
-    return {
-        "version": version,
-        "groups_total": len(groups),
-        "groups_written": groups_written,
-        "meta_files_written": groups_written + 1,
-        "rebased": False,
-    }
-
-
-def _rebase_publish(
-    table_dir: str,
-    base_v: int,
-    groups: dict[str, str],
-    touched: list[str],
-    meta: dict | None,
-    props: dict | None,
-    schema: dict | None,
-) -> int:
-    """Publish a lost-race commit WITHOUT re-staging, when it provably
-    commutes with every interloping commit (see ``commit_snapshot``'s
-    conflict-detection note). Raises FileExistsError on any true
-    conflict — bucket overlap, a commit lacking touched metadata, a
-    flat-manifest head, or diverged table properties — which sends the
-    caller back through ``commit_with_retry``'s full re-stage.
-
-    The rebased list is the HEAD's group map with OUR touched buckets'
-    entries substituted (added where we created, dropped where we
-    removed). Everything bucket-scoped — files, stats, added-versions,
-    deletion vectors — lives INSIDE the group files, so substituting
-    group references IS the state merge; snapshot-level schema is
-    merged additively with the head's (both evolved from the common
-    base, so ``_merge_schemas`` is associative here). Our group files
-    were fsynced before the first publish attempt and a lost race never
-    deletes them, so the rebased list references durable metadata.
-
-    Note the added-version stamps inside our groups say ``base_v + 1``
-    while the commit lands at head+1: harmless, because an added stamp
-    only gates DELETION VECTORS of the same bucket, and disjointness
-    guarantees no interloper touched our buckets — any LATER delete has
-    v > both numbers."""
-    tset = set(touched)
-    last_head = -1
-    for _ in range(6):
-        h = latest_version(table_dir)
-        # re-validate only the interlopers we haven't checked yet
-        for w in range(max(base_v, last_head) + 1, h + 1):
-            wdoc = _read_list_doc(table_dir, w)
-            wt = wdoc.get("touched")
-            if wt is None or set(wt) & tset:
-                raise FileExistsError(
-                    f"true commit conflict on {table_dir}: v{w} touched "
-                    f"{sorted(set(wt or ['<unknown>']) & tset) or wt} "
-                    f"overlapping ours {sorted(tset)}"
-                )
-        last_head = h
-        head_doc = _read_list_doc(table_dir, h)
-        hg = head_doc.get("groups")
-        if hg is None:
-            raise FileExistsError(
-                f"cannot rebase onto flat-manifest head v{h} of {table_dir}"
-            )
-        if (props or {}) != (head_doc.get("props") or {}):
-            raise FileExistsError(
-                f"table properties diverged between base v{base_v} and "
-                f"head v{h} of {table_dir} — re-stage required"
-            )
-        new_groups = dict(hg)
-        for b in touched:
-            if b in groups:
-                new_groups[b] = groups[b]
-            else:
-                new_groups.pop(b, None)
-        import time as _time
-
-        doc: dict = {
-            "version": h + 1,
-            "groups": new_groups,
-            "touched": sorted(touched),
-            "ts": _time.time(),
-        }
-        if meta is not None:
-            doc["meta"] = meta
-        if props:
-            doc["props"] = props
-        sch = head_doc.get("schema")
-        if schema is not None:
-            sch = _merge_schemas(sch, schema) if sch else schema
-        if sch is not None:
-            doc["schema"] = sch
-        mdir = os.path.join(table_dir, "manifest")
-        tmp = os.path.join(
-            mdir, f".v{h + 1}.json.tmp.{os.getpid()}.{uuid.uuid4().hex[:6]}"
-        )
-        with open(tmp, "w") as f:
-            json.dump(doc, f, sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            _publish_manifest(tmp, _manifest_path(table_dir, h + 1))
-        except FileExistsError:
-            os.unlink(tmp)
-            continue  # yet another racer landed — re-validate and retry
-        os.unlink(tmp)
-        _advance_head(table_dir, h + 1)
-        return h + 1
-    raise FileExistsError(
-        f"rebase lost 6 consecutive publish races on {table_dir}"
-    )
-
-
-def _read_list_doc(table_dir: str, version: int) -> dict:
-    """The RAW version file (manifest list) — group references, not the
-    resolved file inventory. Metadata tooling (vacuum's group GC, the
-    manifest-tree query's sharing probe) reads this level."""
-    with _meta_open(_manifest_path(table_dir, version)) as f:
-        return json.load(f)
-
-
-def _branch_path(table_dir: str, branch: str) -> str:
-    return os.path.join(table_dir, "manifest", f"b-{branch}.json")
-
-
-def _read_branch_doc(table_dir: str, branch: str) -> dict:
-    """The raw manifest list at a branch ref (``b-<branch>.json``)."""
-    with _meta_open(_branch_path(table_dir, branch)) as f:
-        return json.load(f)
 
 
 def read_branch(spark: SparkSession, table_dir: str, branch: str) -> DataFrame:
@@ -545,23 +174,10 @@ def publish_branch(table_dir: str, branch: str, version: int) -> dict:
     must be re-staged or rebased against the new head — publishing an
     audited-but-stale snapshot would silently drop the interloper)."""
     doc = _read_branch_doc(table_dir, branch)
-    import time as _time
-
     doc = {k: v for k, v in doc.items() if k != "branch"}
     doc["version"] = version
-    doc["ts"] = _time.time()  # promotion time IS the commit time
-    mdir = os.path.join(table_dir, "manifest")
-    tmp = os.path.join(
-        mdir, f".v{version}.json.tmp.{os.getpid()}.{uuid.uuid4().hex[:6]}"
-    )
-    with open(tmp, "w") as f:
-        json.dump(doc, f, sort_keys=True)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        _publish_manifest(tmp, _manifest_path(table_dir, version))
-    finally:
-        os.unlink(tmp)
+    doc["ts"] = time.time()  # promotion time IS the commit time
+    write_json(_manifest_path(table_dir, version), doc)
     _advance_head(table_dir, version)
     return {"version": version, "meta_files_written": 1}
 
@@ -674,23 +290,11 @@ def tag_snapshot(table_dir: str, tag: str, version: int) -> None:
         raise FileNotFoundError(
             f"cannot tag: v{version} of {table_dir} does not exist"
         )
-    mdir = os.path.join(table_dir, "manifest")
-    tmp = os.path.join(
-        mdir, f".t-{tag}.tmp.{os.getpid()}.{uuid.uuid4().hex[:6]}"
-    )
-    with open(tmp, "w") as f:
-        json.dump({"version": version, "tag": tag}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        _publish_manifest(tmp, _tag_path(table_dir, tag))
-    finally:
-        os.unlink(tmp)
+    write_json(_tag_path(table_dir, tag), {"version": version, "tag": tag})
 
 
 def resolve_tag(table_dir: str, tag: str) -> int:
-    with _meta_open(_tag_path(table_dir, tag)) as f:
-        return int(json.load(f)["version"])
+    return int(_read_json(_tag_path(table_dir, tag))["version"])
 
 
 def drop_tag(table_dir: str, tag: str) -> None:
@@ -706,8 +310,7 @@ def _tagged_versions(table_dir: str) -> set[int]:
     for f in os.listdir(mdir):
         if f.startswith("t-") and f.endswith(".json"):
             try:
-                with _meta_open(os.path.join(mdir, f)) as fh:
-                    out.add(int(json.load(fh)["version"]))
+                out.add(int(_read_json(os.path.join(mdir, f))["version"]))
             except (OSError, ValueError, KeyError):
                 continue
     return out
@@ -721,129 +324,6 @@ def drop_branch(table_dir: str, branch: str) -> None:
         os.unlink(_branch_path(table_dir, branch))
     except FileNotFoundError:
         pass
-
-
-def _read_manifest_doc(table_dir: str, version: int) -> dict:
-    """Resolve snapshot ``version`` to the FLAT manifest shape every
-    reader consumes (files / stats / added / dvs / schema / props).
-
-    Tree manifests (``groups``) are resolved by loading each referenced
-    bucket-group file — O(occupied buckets) metadata opens, each KB-to-
-    MB, independent of how many versions exist. Pre-tree flat manifests
-    pass through unchanged (back-compat for hand-built fixtures). The
-    resolved doc carries the group map under ``_groups`` (internal,
-    never persisted) so callers that can skip identical buckets — e.g.
-    a CDC diff — see the sharing structure."""
-    return _resolve_list_doc(table_dir, _read_list_doc(table_dir, version))
-
-
-def _resolve_list_doc(table_dir: str, doc: dict) -> dict:
-    if "groups" not in doc:
-        return doc
-    mdir = os.path.join(table_dir, "manifest")
-    out = {k: v for k, v in doc.items() if k != "groups"}
-    files: list[str] = []
-    stats: dict = {}
-    added: dict = {}
-    dvs: dict = {}
-    for g in sorted(doc["groups"]):
-        with _meta_open(os.path.join(mdir, doc["groups"][g])) as f:
-            gd = json.load(f)
-        files.extend(gd.get("files", []))
-        stats.update(gd.get("stats", {}))
-        added.update(gd.get("added", {}))
-        if gd.get("dvs") and g.startswith("b"):
-            dvs[g[1:]] = gd["dvs"]
-    out["files"] = sorted(files)
-    if stats:
-        out["stats"] = stats
-    if added:
-        out["added"] = added
-    if dvs:
-        out["dvs"] = dvs
-    out["_groups"] = dict(doc["groups"])
-    return out
-
-
-def read_manifest(table_dir: str, version: int) -> list[str]:
-    return _read_manifest_doc(table_dir, version)["files"]
-
-
-def _head_path(table_dir: str) -> str:
-    return os.path.join(table_dir, "manifest", "_head")
-
-
-def _advance_head(table_dir: str, version: int) -> None:
-    """Advance the HEAD pointer file to ``version`` (best-effort hint).
-
-    The pointer is Delta's ``_last_checkpoint`` / Iceberg's
-    ``version-hint.text`` move: a single small file naming the latest
-    version, so HEAD discovery never lists the manifest directory.
-    It is strictly a HINT, not part of the commit's correctness:
-    · written AFTER the manifest publish (and its directory fsync), so
-      it can only LAG the true head, never lead it;
-    · ``os.replace`` is atomic, so readers see a complete old or new
-      pointer, never a torn one;
-    · monotonic-guarded (skip if the current hint is already ≥), so a
-      slow writer can't regress it far — and even a regressed/stale/
-      missing pointer only costs ``latest_version`` extra forward
-      probes, never a wrong answer.
-    Manifest LISTS here are self-contained (each references every live
-    bucket group), so Delta's other half — periodic log-compaction
-    checkpoints — is structurally unnecessary: every list already IS a
-    checkpoint, and HEAD resolution needs pointer + list (+ the groups
-    the read actually touches), independent of history depth."""
-    hp = _head_path(table_dir)
-    try:
-        with open(hp) as f:
-            if json.load(f).get("version", 0) >= version:
-                return
-    except (OSError, ValueError):
-        pass  # absent or torn-by-crash pointer: just rewrite it
-    tmp = f"{hp}.tmp.{os.getpid()}.{uuid.uuid4().hex[:6]}"
-    with open(tmp, "w") as f:
-        json.dump({"version": version}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, hp)  # atomic overwrite; last-writer-wins is safe
-
-
-def latest_version(table_dir: str) -> int:
-    """Resolve HEAD in O(1) metadata reads (r9 verdict missing #1).
-
-    Reads the ``_head`` pointer (one small file), verifies the named
-    manifest exists, then FORWARD-PROBES ``v+1, v+2, …`` with existence
-    checks to absorb pointer lag (a crash between publish and pointer
-    write, or a concurrent commit landing mid-read). Versions commit
-    sequentially — a child commit requires its parent manifest — so the
-    first missing version terminates the probe correctly. Without a
-    pointer (pre-pointer table) it falls back to ONE directory listing
-    and SELF-HEALS by writing the pointer, so the O(versions) cost is
-    paid at most once per table lifetime — not per read, which on a
-    streaming table committing every minute is the difference between
-    2 metadata ops and half a million LISTs a year."""
-    v = 0
-    try:
-        with _meta_open(_head_path(table_dir)) as f:
-            hint = json.load(f).get("version", 0)
-        if hint > 0 and os.path.exists(_manifest_path(table_dir, hint)):
-            v = hint
-    except (OSError, ValueError):
-        pass
-    if v == 0:
-        mdir = os.path.join(table_dir, "manifest")
-        versions = [
-            int(f[1:-5])
-            for f in os.listdir(mdir)
-            if f.startswith("v") and f.endswith(".json")
-        ]
-        if not versions:
-            raise FileNotFoundError(f"no snapshots committed in {table_dir}")
-        v = max(versions)
-    while os.path.exists(_manifest_path(table_dir, v + 1)):
-        v += 1
-    _advance_head(table_dir, v)  # self-heal lag so the next read is O(1)
-    return v
 
 
 class ConstraintViolation(ValueError):
@@ -1087,8 +567,6 @@ def rename_column(
         rebase_from=parent_version,
     )
 
-
-_WIDEN_OK = {("integer", "long"), ("float", "double")}
 
 
 def drop_column(table_dir: str, parent_version: int, name: str) -> dict:
@@ -1348,52 +826,6 @@ def _bucket_of(key: str, n_buckets: int = _N_BUCKETS):
     return F.pmod(F.col(key), F.lit(n_buckets))
 
 
-def _table_n_buckets(doc: dict) -> int:
-    """The table's bucket count — a TABLE PROPERTY (default 16): every
-    writer must bucket new rows and DVs with the SAME modulus the data
-    files were laid out with, or hot-bucket targeting and DV application
-    silently go wrong after a REBUCKET commit."""
-    return int(doc.get("props", {}).get("n_buckets", _N_BUCKETS))
-
-
-def _bucket_of_path(p: str) -> int:
-    return int(p.split("_b=")[1].split(os.sep)[0])
-
-
-def _applicable_dvs(doc: dict, f: str) -> tuple[str, ...]:
-    """The deletion vectors that apply to data file ``f``: those of its
-    bucket committed AFTER the file was added. The added-version guard
-    is what makes key-DVs behave like Delta's PER-FILE positional
-    bitmaps: a delete erases the key from files that existed when it
-    ran, while a row re-inserted by a LATER append lives in a younger
-    file and must survive (resurrection would otherwise be impossible
-    until compaction). Files without added-version metadata default to
-    0 — every DV applies — the sound direction for hand-built
-    manifests."""
-    dvs = doc.get("dvs")
-    if not dvs:
-        return ()
-    av = doc.get("added", {}).get(f, 0)
-    return tuple(
-        sorted(
-            d["path"]
-            for d in dvs.get(str(_bucket_of_path(f)), [])
-            if d["v"] > av
-        )
-    )
-
-
-def _colmap(doc_or_props: dict | None) -> dict:
-    """The snapshot's COLUMN MAPPING {logical: physical} — Delta
-    column-mapping mode=name, reduced: physical parquet column names
-    NEVER change after a rename; the logical name is list-level
-    metadata. Empty for tables that were never renamed."""
-    if not doc_or_props:
-        return {}
-    props = doc_or_props.get("props", doc_or_props)
-    return dict(props.get("colmap", {}))
-
-
 def _to_logical(df: DataFrame, cm: dict) -> DataFrame:
     for logical, physical in cm.items():
         if physical in df.columns:
@@ -1489,34 +921,6 @@ def _schema_of(df: DataFrame) -> dict:
 
     fields = [f for f in df.schema.fields if f.name != "_b"]
     return T.StructType(fields).jsonValue()
-
-
-def _merge_schemas(parent: dict | None, incoming: dict) -> dict:
-    """ADDITIVE-ONLY schema evolution, enforced (r9 ADVICE): the child
-    manifest schema is the union of the parent's fields (in parent order)
-    and any NEW incoming fields — a batch that merely OMITS a column the
-    parent files carry can never narrow the table's read schema and make
-    existing data invisible, and a batch that RETYPES a parent column is
-    rejected loudly (the Delta/Iceberg write contract)."""
-    if parent is None:
-        return incoming
-    by_name = {f["name"]: f for f in incoming["fields"]}
-    for pf in parent["fields"]:
-        nf = by_name.get(pf["name"])
-        if nf is not None and nf["type"] != pf["type"]:
-            if (nf["type"], pf["type"]) in _WIDEN_OK:
-                continue  # widened column: narrow batches keep committing
-            raise ValueError(
-                f"schema evolution must be additive: column "
-                f"{pf['name']!r} is {pf['type']} in the parent snapshot "
-                f"but {nf['type']} in the incoming batch"
-            )
-    parent_names = {f["name"] for f in parent["fields"]}
-    merged = dict(parent)
-    merged["fields"] = list(parent["fields"]) + [
-        f for f in incoming["fields"] if f["name"] not in parent_names
-    ]
-    return merged
 
 
 def snapshot_write(
@@ -2351,21 +1755,22 @@ def _clones_dir(table_dir: str) -> str:
 def _register_clone(src_dir: str, dst_dir: str, version: int) -> None:
     """Record a clone BACK-REFERENCE in the source's registry (r13,
     verdict missing #1): one content-named JSON per clone under
-    ``<src>/clones/``, written via tmp+rename so a half-written entry is
-    never read. The source's expire/vacuum consults this registry and
-    treats live clones' referenced files as GC roots — closing the
-    documented Delta-style data-loss edge where source-side VACUUM could
-    delete files a shallow clone still lists."""
+    ``<src>/clones/``, published with ``write_json`` so a half-written
+    entry is never read. The source's expire/vacuum consults this
+    registry and treats live clones' referenced files as GC roots —
+    closing the documented Delta-style data-loss edge where source-side
+    VACUUM could delete files a shallow clone still lists."""
     import hashlib
 
     creg = _clones_dir(src_dir)
     os.makedirs(creg, exist_ok=True)
     dst_real = os.path.realpath(dst_dir)
     name = hashlib.sha1(dst_real.encode()).hexdigest()[:16] + ".json"
-    tmp = os.path.join(creg, "." + name + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"clone_dir": dst_real, "clone_version": version}, fh)
-    os.replace(tmp, os.path.join(creg, name))
+    write_json(
+        os.path.join(creg, name),
+        {"clone_dir": dst_real, "clone_version": version},
+        exclusive=False,
+    )
 
 
 def _clone_referenced(table_dir: str, _seen: set | None = None) -> set[str]:
@@ -2391,8 +1796,7 @@ def _clone_referenced(table_dir: str, _seen: set | None = None) -> set[str]:
             continue
         p = os.path.join(creg, f)
         try:
-            with open(p) as fh:
-                cdir = json.load(fh)["clone_dir"]
+            cdir = _read_json(p)["clone_dir"]
         except (OSError, ValueError, KeyError):
             continue  # torn concurrent write — keep entry, skip this pass
         if not os.path.isdir(os.path.join(cdir, "manifest")):
@@ -2418,8 +1822,9 @@ def fsck(table_dir: str) -> dict:
     · ``orphans``  — data/DV files under THIS table's root reachable
       from no manifest or branch ref (crashed writers' staging, lost
       commit races): dead weight; VACUUM's orphan sweep reclaims them.
-    · ``stale_tmps`` — leftover ``.{name}.tmp.{pid}`` manifest temps
-      from crashed publishes (never visible to readers; removable).
+    · ``stale_tmps`` — leftover ``write_json`` staging temps
+      (``lake_protocol.is_temp_name``) from crashed publishes (never
+      visible to readers; removable).
     · ``missing_groups`` — version lists pointing at absent
       content-addressed group files (torn metadata: the version cannot
       be resolved at all).
@@ -2472,9 +1877,7 @@ def fsck(table_dir: str) -> dict:
         if os.path.realpath(p).startswith(table_real)
         and os.path.realpath(p) not in refs_real
     )
-    stale_tmps = sorted(
-        f for f in os.listdir(mdir) if ".tmp." in f
-    )
+    stale_tmps = sorted(f for f in os.listdir(mdir) if is_temp_name(f))
     return {
         "n_referenced": len(refs),
         "missing": missing,
@@ -2546,12 +1949,7 @@ def q_lake_fsck(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.createDataFrame([(1,)], "x long").toPandas().to_parquet(
         os.path.join(stray_dir, f"stray-{_uuid.uuid4().hex[:6]}.parquet")
     )
-    with open(
-        os.path.join(
-            table_dir, "manifest", f".v99.json.tmp.{os.getpid()}"
-        ),
-        "w",
-    ) as fh:
+    with open(_lp._temp_path(_manifest_path(table_dir, 99)), "w") as fh:
         fh.write("{}")
     rep = fsck(table_dir)
     rep2 = fsck(table_dir)  # read-only: the audit never mutates
@@ -3532,25 +2930,24 @@ def q_lake_latest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count manifest-dir file OPENS during a cold HEAD resolution (the
     # os.path.exists forward probes are stat()s, not opens — the object-
     # store analogue is HEAD-not-GET, which is the cheap class of op).
-    # The spy swaps THIS MODULE's _meta_open indirection — every metadata
-    # read funnels through it — never builtins.open, so concurrent
-    # driver-side threads are untouched and an exception can't leak a
-    # process-wide patched open.
-    global _meta_open
+    # The spy swaps the protocol module's _meta_open indirection — every
+    # metadata read funnels through it — never builtins.open, so
+    # concurrent driver-side threads are untouched and an exception can't
+    # leak a process-wide patched open.
     opened: list[str] = []
-    real_open = _meta_open
+    real_open = _lp._meta_open
 
     def _spy(path, *a, **kw):
         opened.append(str(path))
         return real_open(path, *a, **kw)
 
-    _meta_open = _spy
+    _lp._meta_open = _spy
     try:
         head = latest_version(table_dir)
         head_df = snapshot_read(spark, table_dir)  # no version argument
         n_meta = len(set(opened))
     finally:
-        _meta_open = real_open
+        _lp._meta_open = real_open
 
     agg = head_df.agg(
         F.count(F.lit(1)).alias("n"),
@@ -4114,8 +3511,9 @@ def q_lake_manifest_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
       both v1 and v2: all 15 untouched buckets (content-addressed
       structural sharing; no parent diffing anywhere in the writer).
     · ``cold_meta_opens`` — metadata opens for a cold HEAD read through
-      the module's ``_meta_open`` seam: pointer + manifest list + one
-      group per occupied bucket, independent of version count.
+      the protocol module's ``_meta_open`` seam: pointer + manifest
+      list + one group per occupied bucket, independent of version
+      count.
     · row counts / cents sums at HEAD and the v1 time travel prove the
       tree resolves to exactly the flat semantics readers had before.
 
@@ -4123,7 +3521,6 @@ def q_lake_manifest_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     over orders (e.g. shared_groups = distinct k%16 of the base slice),
     so a regression in sharding, sharing, or resolution shifts a pinned
     value."""
-    global _meta_open
     from cuny_courses_spark.operators.scans import _io_dir
 
     table_dir = _io_dir(sf_dir, "lake_mtree")
@@ -4145,19 +3542,19 @@ def q_lake_manifest_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # cold HEAD read with the metadata-open spy on the module seam
     opened: list[str] = []
-    real_open = _meta_open
+    real_open = _lp._meta_open
 
     def _spy(path, *a, **kw):
         opened.append(str(path))
         return real_open(path, *a, **kw)
 
-    _meta_open = _spy
+    _lp._meta_open = _spy
     try:
         head = latest_version(table_dir)
         head_df = snapshot_read(spark, table_dir)
         cold_opens = len(set(opened))
     finally:
-        _meta_open = real_open
+        _lp._meta_open = real_open
 
     agg = head_df.agg(
         F.count(F.lit(1)).alias("n"),
@@ -5042,17 +4439,7 @@ def txn_commit(
     os.makedirs(txn_dir, exist_ok=True)
     v = parent_txn + 1
     doc = {"txn": v, "tables": {str(k): int(x) for k, x in versions.items()}}
-    tmp = os.path.join(
-        txn_dir, f".t{v}.tmp.{os.getpid()}.{uuid.uuid4().hex[:6]}"
-    )
-    with open(tmp, "w") as f:
-        json.dump(doc, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        _publish_manifest(tmp, _txn_path(txn_dir, v))
-    finally:
-        os.unlink(tmp)
+    write_json(_txn_path(txn_dir, v), doc)
     return doc
 
 
@@ -5074,8 +4461,7 @@ def txn_resolve(txn_dir: str, txn_version: int | None = None) -> dict:
     v = txn_latest(txn_dir) if txn_version is None else txn_version
     if v <= 0:
         raise ValueError(f"no transaction published in {txn_dir}")
-    with _meta_open(_txn_path(txn_dir, v)) as f:
-        return json.load(f)
+    return _read_json(_txn_path(txn_dir, v))
 
 
 def txn_read(
@@ -6539,10 +5925,9 @@ def q_lake_stream_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
                         key="k",
                         delete_col="_del",
                     )
-                tmp = marker + ".tmp"
-                with open(tmp, "w") as fh:
-                    json.dump({"src_version": int(v)}, fh)
-                os.replace(tmp, marker)
+                write_json(
+                    marker, {"src_version": int(v)}, exclusive=False
+                )
         finally:
             bdf.unpersist()
 

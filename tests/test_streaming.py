@@ -746,8 +746,8 @@ def test_lakefeed_bytes_budget_admission(spark, tmp_path):
         table_dir, 3, small.select((F.col("k") + 20).alias("k"), "st"),
         key="k", batch_id=4,
     )  # v4 tiny
-    d1 = set(lf._resolve(table_dir, 1)["files"])
-    d2 = lf._resolve(table_dir, 2)["files"]
+    d1 = set(lh._read_manifest_doc(table_dir, 1)["files"])
+    d2 = lh._read_manifest_doc(table_dir, 2)["files"]
     fat_bytes = sum(os.path.getsize(p) for p in set(d2) - d1)
 
     def _reader(**opts):
